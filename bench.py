@@ -23,7 +23,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from garmin_performance_analysis_spark.harness.catalog import CATALOG  # noqa: E402
+from garmin_performance_analysis_spark.harness.catalog import CATALOG, WINDOW  # noqa: E402
 from garmin_performance_analysis_spark.session import get_spark  # noqa: E402
 
 # Headline set: one per operator family, weighted toward the shapes that
@@ -549,18 +549,6 @@ def clear_persisted(spark) -> None:
 
 
 def main() -> None:
-    # mm7's numbers are comparable across rounds only at the default
-    # resolution knobs; a stray env override would silently shift the
-    # bench (and any in-bench parity anchor).  Unset with a warning —
-    # knob experiments live in scripts/mm7_resolution_knob.py.
-    for var in ("SPARK_GRAFT_MM7_SLICES", "SPARK_GRAFT_MM7_MAX_HAMMING"):
-        if var in os.environ:
-            print(
-                f"WARNING: unsetting {var}={os.environ[var]} — mm7 "
-                "bench numbers are defined at the defaults only",
-                file=sys.stderr,
-            )
-            del os.environ[var]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1)) if m else -1.0
@@ -636,12 +624,11 @@ def main() -> None:
     # still parses as the one-JSON-line contract.
     # Ordering (round-9 VERDICT item 2): the driver's bounded tail kept
     # only the LAST parts in r9, so the detail for this round's fronted
-    # entries must sit CLOSEST to the summary line.  The catalog's
-    # first-50 window IS the current round's fronted set (the rotation
-    # puts it there), so print non-window queries first and window
-    # queries last — whatever the tail truncates, every fronted entry's
+    # entries must sit CLOSEST to the summary line.  ``catalog.WINDOW``
+    # IS the current round's fronted set, so print non-window queries
+    # first and window queries last — whatever the tail truncates, every fronted entry's
     # number survives.
-    window = set(list(CATALOG)[:50])
+    window = set(WINDOW)
     names = [n for n in timings if n not in window] + [
         n for n in timings if n in window
     ]
@@ -663,7 +650,8 @@ def main() -> None:
                 "steal": {n: steals[n] for n in names[start : start + chunk]},
             }
         )
-        assert len(line) <= 1024, f"steal part {part} exceeds 1 KB"
+        if len(line) > 1024:
+            raise ValueError(f"steal part {part} exceeds 1 KB")
         print(line)
     for part, start in enumerate(range(0, len(names), chunk), start=1):
         line = json.dumps(
@@ -673,7 +661,8 @@ def main() -> None:
                 "queries": {n: timings[n] for n in names[start : start + chunk]},
             }
         )
-        assert len(line) <= 1024, f"detail part {part} exceeds 1 KB"
+        if len(line) > 1024:
+            raise ValueError(f"detail part {part} exceeds 1 KB")
         print(line)
     steal_sorted = sorted(steals.values())
     # Load honesty (round-8 VERDICT item 5): BENCH_r08 was captured

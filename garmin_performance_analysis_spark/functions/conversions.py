@@ -1,37 +1,12 @@
 """Unit conversions (SURVEY.md §2.8 F6) as column expressions.
 
-Reference: pace↔speed ``mcp/form_baseline/utils.py:31-53``; km/h→m/s and
-°C→°F ``mcp/database/readers/performance.py:122-128``; m→km
-``splits_helpers/extractor.py:48-50``; ``M:SS`` pace formatting
-``mcp/analysis/derivations.py:25-35``.
+Reference: ``M:SS`` pace formatting ``mcp/analysis/derivations.py:25-35``.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-
-
-def pace_s_per_km_to_speed_ms(pace: Column) -> Column:
-    """s/km → m/s (guarded against nonpositive pace)."""
-    return F.when(pace > 0, F.lit(1000.0) / pace)
-
-
-def speed_ms_to_pace_s_per_km(speed: Column) -> Column:
-    """m/s → s/km (guarded against nonpositive speed)."""
-    return F.when(speed > 0, F.lit(1000.0) / speed)
-
-
-def kmh_to_ms(kmh: Column) -> Column:
-    return kmh / 3.6
-
-
-def celsius_to_fahrenheit(c: Column) -> Column:
-    return c * 9.0 / 5.0 + 32.0
-
-
-def meters_to_km(m: Column) -> Column:
-    return m / 1000.0
 
 
 def pace_str(pace_s_per_km: Column) -> Column:

@@ -1772,27 +1772,18 @@ def mm7_audio_energyhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     offset, forgets the 8-bit unsigned→signed shift, or breaks the
     exact threshold hash-mismatches.
 
-    ``SPARK_GRAFT_MM7_SLICES`` (default 64, the t16 pack-knob
-    convention) sets the envelope resolution, and
-    ``SPARK_GRAFT_MM7_MAX_HAMMING`` the match budget (default scales
-    proportionally, 3 per 64 bits).  NON-default values change the
-    RESULT by design — a coarse 64-bit envelope saturates when the
-    corpus has more distinct tracks than its effective envelope
-    states (output then grows superlinearly with corpus size) — so
-    the oracle holds at the defaults only and scale experiments set
-    the env vars (``scripts/mm7_resolution_knob.py``).  Measured on
-    the 10x corpus: 128 slices at an ABSOLUTE budget of 4 holds the
-    default's family recall (0.9746 vs 0.9745) while halving the
-    false-match mass (316,984 → 148,387 collision pairs; output
-    growth 44x → 29x) — widening bits while scaling the budget
-    proportionally (h=6) improves recall but not saturation, because
-    the RELATIVE threshold is what the collision mass tracks."""
-    import os as _os
-
-    n_slices = int(_os.environ.get("SPARK_GRAFT_MM7_SLICES", "64"))
-    max_ham = int(
-        _os.environ.get("SPARK_GRAFT_MM7_MAX_HAMMING", str(3 * n_slices // 64))
-    )
+    The envelope resolution is 64 slices with a match budget of 3
+    bits; the oracle holds at exactly these values.  A coarse 64-bit
+    envelope saturates when the corpus has more distinct tracks than
+    its effective envelope states (output then grows superlinearly
+    with corpus size).  Measured on the 10x corpus: 128 slices at an
+    ABSOLUTE budget of 4 holds the default's family recall (0.9746 vs
+    0.9745) while halving the false-match mass (316,984 → 148,387
+    collision pairs; output growth 44x → 29x) — widening bits while
+    scaling the budget proportionally (h=6) improves recall but not
+    saturation, because the RELATIVE threshold is what the collision
+    mass tracks."""
+    n_slices, max_ham = 64, 3
     docs = load_table(spark, sf_dir, "documents")
     fam = F.floor(F.col("doc_id") / 4)
     d = docs.select(

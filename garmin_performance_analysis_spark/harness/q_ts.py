@@ -1051,16 +1051,12 @@ def w14_seasonal_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _pack_buckets() -> int:
-    """Grouped-map pack-bucket count for t16/t17 (the parallelism knob:
-    users never split across buckets; more buckets = more parallel
-    grouped-map tasks, fewer users looped per Arrow batch).  32 is the
-    measured sweet spot at sf0.1 on local[32]; the env override exists
-    so scripts/t16_pack_knob.py can measure the knob at 10x without
-    touching query semantics (results are bucket-count-invariant)."""
-    import os
-
-    return int(os.environ.get("SPARK_GRAFT_PACK_BUCKETS", "32"))
+# Grouped-map pack-bucket count for t16/t17 (the parallelism knob:
+# users never split across buckets; more buckets = more parallel
+# grouped-map tasks, fewer users looped per Arrow batch).  32 is the
+# measured sweet spot at sf0.1 on local[32]; results are
+# bucket-count-invariant.
+_PACK_BUCKETS = 32
 
 
 @register(
@@ -1157,7 +1153,7 @@ def t16_holt_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     out = (
-        daily.withColumn("_b", F.pmod(F.hash("user_id"), F.lit(_pack_buckets())))
+        daily.withColumn("_b", F.pmod(F.hash("user_id"), F.lit(_PACK_BUCKETS)))
         .groupBy("_b")
         .applyInPandas(
             holt, "user_id long, day string, level double, trend double"
@@ -1281,7 +1277,7 @@ def t17_holt_winters(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     out = (
-        daily.withColumn("_b", F.pmod(F.hash("user_id"), F.lit(_pack_buckets())))
+        daily.withColumn("_b", F.pmod(F.hash("user_id"), F.lit(_PACK_BUCKETS)))
         .groupBy("_b")
         .applyInPandas(
             hw,

@@ -30,7 +30,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from garmin_performance_analysis_spark.harness.catalog import CATALOG
+from garmin_performance_analysis_spark.harness.catalog import CATALOG, WINDOW
 from garmin_performance_analysis_spark.harness.compare import (
     compare_frames,
     duckdb_connection,
@@ -83,24 +83,7 @@ def staleness_report() -> int:
     return 0
 
 
-def _guard_mm7_env() -> None:
-    """mm7's parity oracle is only valid at the default resolution
-    knobs; a stray SPARK_GRAFT_MM7_* in the environment would change
-    results silently and read as a hash-mismatch regression (ADVICE
-    r11).  Unset them here with a loud warning — scale experiments
-    use scripts/mm7_resolution_knob.py, never a parity sweep."""
-    for var in ("SPARK_GRAFT_MM7_SLICES", "SPARK_GRAFT_MM7_MAX_HAMMING"):
-        if var in os.environ:
-            print(
-                f"WARNING: unsetting {var}={os.environ[var]} — mm7's "
-                "oracle holds at the defaults only",
-                file=sys.stderr,
-            )
-            del os.environ[var]
-
-
 def main() -> int:
-    _guard_mm7_env()
     if "--staleness" in sys.argv[1:]:
         return staleness_report()
     argv = [a for a in sys.argv[1:] if a != "--strict"]
@@ -126,7 +109,7 @@ def main() -> int:
         items = items[:window]
     elif stalest:
         latest = _latest_driver_rounds()
-        in_window = set(list(CATALOG)[:50])
+        in_window = set(WINDOW)
         candidates = sorted(
             (n for n in CATALOG if n not in in_window),
             key=lambda n: (latest.get(n, 0), n),

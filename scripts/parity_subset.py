@@ -24,6 +24,8 @@ from garmin_performance_analysis_spark.session import get_spark  # noqa: E402
 
 
 def main() -> int:
+    if len(sys.argv) < 3:
+        raise SystemExit(__doc__)
     sf_dir = sys.argv[1]
     names = sys.argv[2:]
     unknown = [n for n in names if n not in CATALOG]
@@ -34,11 +36,11 @@ def main() -> int:
     failures = 0
     for name in names:
         spec = CATALOG[name]
+        if spec.oracle is None:
+            print(f"skip  {name}: rows-only, no oracle")
+            continue
         t0 = time.time()
         spark_pdf = spec.fn(spark, sf_dir).toPandas()
-        if spec.oracle is None:
-            print(f"skip  {name}: rows-only ({len(spark_pdf)} rows)")
-            continue
         oracle_pdf = con.sql(spec.oracle).df()
         res = compare_frames(name, spark_pdf, oracle_pdf, strict=True)
         status = "ok  " if res.ok else "FAIL"

@@ -3,7 +3,8 @@
 
 Usage: python scripts/profile_query.py <name> [runs]
 
-Runs the query with the Spark event log enabled (UI stays off), then
+Runs the query on the engine's own session (``session.get_spark``, the
+one the bench uses) with the Spark event log enabled at JVM launch, then
 parses the log into per-stage wall/task-time rows tagged by job group,
 so a composite query's cost can be attributed to its internal passes
 (candidate join vs CC rounds vs final window, checkpoint jobs, etc.).
@@ -20,9 +21,8 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-os.environ.setdefault("SPARK_GRAFT_EVENTLOG", "1")
-
 from garmin_performance_analysis_spark.harness.catalog import CATALOG  # noqa: E402
+from garmin_performance_analysis_spark.session import get_spark  # noqa: E402
 
 
 def main() -> None:
@@ -30,32 +30,14 @@ def main() -> None:
     runs = int(sys.argv[2]) if len(sys.argv) > 2 else 1
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     log_dir = tempfile.mkdtemp(prefix="prof_evlog_")
-    from pyspark.sql import SparkSession
-
-    from garmin_performance_analysis_spark import session as sess_mod
-
-    # same session settings as the bench, plus the event log
-    builder = sess_mod.get_spark  # ensure module import side effects match
-    os.environ["SPARK_GRAFT_EVENTLOG_DIR"] = log_dir
-    spark = (
-        SparkSession.builder.appName("profile")
-        .master(f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]")
-        .config("spark.eventLog.enabled", "true")
-        .config("spark.eventLog.dir", log_dir)
-        .config("spark.eventLog.compress", "false")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", "16g")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config(
-            "spark.sql.adaptive.coalescePartitions.parallelismFirst",
-            os.environ.get("SPARK_GRAFT_AQE_PARALLELISM_FIRST", "false"),
-        )
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .getOrCreate()
+    # event-log settings are launch-time confs: pass them to the JVM the
+    # session factory starts
+    os.environ["PYSPARK_SUBMIT_ARGS"] = (
+        "--conf spark.eventLog.enabled=true"
+        f" --conf spark.eventLog.dir={log_dir}"
+        " --conf spark.eventLog.compress=false pyspark-shell"
     )
+    spark = get_spark("profile")
     # warmup as in bench
     CATALOG["p2_point_lookup"].fn(spark, sf_dir).write.format("noop").mode(
         "overwrite"

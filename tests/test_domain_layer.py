@@ -29,8 +29,10 @@ from garmin_performance_analysis_spark.sources.raw_json import (
 )
 from garmin_performance_analysis_spark.streaming.ingest import incremental_append
 
-FIXTURE_DIR = (
-    "/root/reference/packages/garmin-mcp-server/tests/fixtures/data/raw/activity/12345678901"
+# hand-written raw-JSON fixtures in the reference's bronze layout
+# (FIXTURES.md "Raw JSON (bronze) fixture shapes")
+FIXTURE_DIR = os.path.join(
+    os.path.dirname(__file__), "fixtures", "raw", "activity", "12345678901"
 )
 
 
