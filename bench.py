@@ -1,7 +1,13 @@
 #!/usr/bin/env python
-"""Benchmark harness: runs the headline catalog queries at
+"""Benchmark harness: runs the headline catalog queries (or only the
+entries named on the command line, with the same method) at
 ``$SPARK_GRAFT_SF_DIR`` (default /root/testdata/sf0.1) on
-``local[$SPARK_GRAFT_CPUS]`` and prints ONE JSON line:
+``local[$SPARK_GRAFT_CPUS]``:
+
+    python bench.py                                   # the HEADLINE list
+    python bench.py a1_stats_block a9_profile_table   # named entries only
+
+and prints ONE JSON summary line:
 
     {"metric": "...", "value": <total_sec>, "unit": "sec",
      "queries": {"q1_pricing_summary": sec, ...}, "sf": 0.1}
@@ -549,6 +555,11 @@ def clear_persisted(spark) -> None:
 
 
 def main() -> None:
+    subset = sys.argv[1:]
+    unknown = [n for n in subset if n not in CATALOG]
+    if unknown:
+        raise SystemExit(f"not in catalog: {unknown}")
+    queries = subset or HEADLINE
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1)) if m else -1.0
@@ -580,7 +591,7 @@ def main() -> None:
     max_runs = max(runs, int(os.environ.get("SPARK_GRAFT_BENCH_MAX_RUNS", "5")))
     timings: dict[str, float] = {}
     steals: dict[str, float] = {}
-    for name in HEADLINE:
+    for name in queries:
         s0, st0 = read_steal()
         walls: list[float] = []
         while True:
@@ -607,7 +618,9 @@ def main() -> None:
     # every new entry pays Spark's ~0.2-0.3 s fixed local[32] overhead
     # regardless of plan quality.  Report the compliance split and the
     # p50/p90 read wall next to the average.
-    def _pctl(sorted_vals: list, q: float) -> float:
+    def _pctl(sorted_vals: list, q: float) -> float | None:
+        if not sorted_vals:
+            return None
         i = max(0, min(len(sorted_vals) - 1, round(q * (len(sorted_vals) - 1))))
         return round(sorted_vals[i], 3)
 
@@ -673,7 +686,7 @@ def main() -> None:
     print(
         json.dumps(
             {
-                "metric": "headline_query_wall_sec",
+                "metric": "subset_query_wall_sec" if subset else "headline_query_wall_sec",
                 "value": total,
                 "unit": "sec",
                 "sf": sf,

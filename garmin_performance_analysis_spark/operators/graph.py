@@ -16,6 +16,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.storagelevel import StorageLevel
 
+from ..plans.materialize import release
+
 # Edge count under which the INTEGER-EXACT fixed-round kernels (BFS,
 # k-core peel, label propagation) solve on the driver from one bounded
 # collect: each distributed round costs 2-3 jobs of pure choreography,
@@ -199,86 +201,90 @@ def bfs_hops(
     # measured 1.5-2x worse (the distinct shuffle re-runs), and the
     # old eager localCheckpoint was the fault-tolerance hazard.
     edges = edges.select(src_col, dst_col).persist(StorageLevel.MEMORY_AND_DISK)
-    small = False
-    src_frame = None
-    if type_ok:
-        # one bounded agg job materializes the cache, sizes the graph
-        # AND detects NULLs engine-side (count(col) skips NULLs; NULL
-        # endpoints have engine-specific join semantics, so those
-        # graphs stay distributed) — no Arrow collect is paid unless
-        # the graph is both small and NULL-free
-        row = edges.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.count(src_col).alias("ns"),
-            F.count(dst_col).alias("nd"),
-        ).first()
-        small = (
-            row["n"] <= _DRIVER_GRAPH_MAX_EDGES
-            and row["ns"] == row["n"]
-            and row["nd"] == row["n"]
-        )
-    if small:
-        src_frame = (
-            sources.select(node_col)
-            .distinct()
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        )
-        srow = src_frame.agg(
-            F.count(F.lit(1)).alias("n"), F.count(node_col).alias("nn")
-        ).first()
-        small = srow["n"] <= _DRIVER_GRAPH_MAX_EDGES and srow["nn"] == srow["n"]
-    if small:
-        epdf = edges.toPandas()
-        spdf = src_frame.toPandas()
-        edges.unpersist(False)
-        src_frame.unpersist(False)
-        adj: dict = {}
-        for s, d in zip(epdf[src_col].tolist(), epdf[dst_col].tolist()):
-            adj.setdefault(s, []).append(d)
-        dist = {n: 0 for n in spdf[node_col].tolist()}
-        frontier = set(dist)
+    src_frame = dist = None
+    try:
+        small = False
+        if type_ok:
+            # one bounded agg job materializes the cache, sizes the graph
+            # AND detects NULLs engine-side (count(col) skips NULLs; NULL
+            # endpoints have engine-specific join semantics, so those
+            # graphs stay distributed) — no Arrow collect is paid unless
+            # the graph is both small and NULL-free
+            row = edges.agg(
+                F.count(F.lit(1)).alias("n"),
+                F.count(src_col).alias("ns"),
+                F.count(dst_col).alias("nd"),
+            ).first()
+            small = (
+                row["n"] <= _DRIVER_GRAPH_MAX_EDGES
+                and row["ns"] == row["n"]
+                and row["nd"] == row["n"]
+            )
+        if small:
+            src_frame = (
+                sources.select(node_col)
+                .distinct()
+                .persist(StorageLevel.MEMORY_AND_DISK)
+            )
+            srow = src_frame.agg(
+                F.count(F.lit(1)).alias("n"), F.count(node_col).alias("nn")
+            ).first()
+            small = srow["n"] <= _DRIVER_GRAPH_MAX_EDGES and srow["nn"] == srow["n"]
+        if small:
+            epdf = edges.toPandas()
+            spdf = src_frame.toPandas()
+            adj: dict = {}
+            for s, d in zip(epdf[src_col].tolist(), epdf[dst_col].tolist()):
+                adj.setdefault(s, []).append(d)
+            seen = {n: 0 for n in spdf[node_col].tolist()}
+            frontier = set(seen)
+            for h in range(1, max_hops + 1):
+                nxt = set()
+                for u in frontier:
+                    for v in adj.get(u, ()):
+                        if v not in seen:
+                            seen[v] = h
+                            nxt.add(v)
+                if not nxt:
+                    break
+                frontier = nxt
+            schema = T.StructType(
+                [
+                    T.StructField(node_col, node_dt),
+                    T.StructField("hops", T.IntegerType()),
+                ]
+            )
+            return spark.createDataFrame(sorted(seen.items()), schema)
+        dist = sources.select(
+            F.col(node_col), F.lit(0).alias("hops")
+        ).distinct().localCheckpoint(eager=True)
         for h in range(1, max_hops + 1):
-            nxt = set()
-            for u in frontier:
-                for v in adj.get(u, ()):
-                    if v not in dist:
-                        dist[v] = h
-                        nxt.add(v)
-            if not nxt:
-                break
-            frontier = nxt
-        schema = T.StructType(
-            [
-                T.StructField(node_col, node_dt),
-                T.StructField("hops", T.IntegerType()),
-            ]
-        )
-        return spark.createDataFrame(sorted(dist.items()), schema)
-    if src_frame is not None:
-        # sources were gated but the graph fell through (NULL-bearing
-        # or oversized source set)
-        src_frame.unpersist(False)
-    dist = sources.select(
-        F.col(node_col), F.lit(0).alias("hops")
-    ).distinct().localCheckpoint(eager=True)
-    for h in range(1, max_hops + 1):
-        frontier = dist.filter(F.col("hops") == h - 1).select(
-            F.col(node_col).alias("_fnode")
-        )
-        reached = (
-            edges.join(frontier, edges[src_col] == F.col("_fnode"))
-            .select(F.col(dst_col).alias(node_col), F.lit(h).alias("hops"))
-        )
-        dist = (
-            dist.unionByName(reached)
-            .groupBy(node_col)
-            .agg(F.min("hops").alias("hops"))
-            .localCheckpoint(eager=True)
-        )
-    # dist was eagerly checkpointed every round, so the returned frame
-    # no longer references the cached projection
-    edges.unpersist(False)
-    return dist
+            frontier = dist.filter(F.col("hops") == h - 1).select(
+                F.col(node_col).alias("_fnode")
+            )
+            reached = (
+                edges.join(frontier, edges[src_col] == F.col("_fnode"))
+                .select(F.col(dst_col).alias(node_col), F.lit(h).alias("hops"))
+            )
+            nxt = (
+                dist.unionByName(reached)
+                .groupBy(node_col)
+                .agg(F.min("hops").alias("hops"))
+                .localCheckpoint(eager=True)
+            )
+            release(dist)
+            dist = nxt
+        return dist
+    except BaseException:
+        if dist is not None:
+            release(dist)
+        raise
+    finally:
+        # every returned frame is driver-built or eagerly checkpointed,
+        # so none of them reads these projections
+        edges.unpersist(False)
+        if src_frame is not None:
+            src_frame.unpersist(False)
 
 
 def kcore_peel(
@@ -332,57 +338,64 @@ def kcore_peel(
     # rounds driver-side instead of paying ~3 jobs per round.  The
     # cheap type check runs FIRST so non-integral graphs never pay the
     # count job.
-    u_dt = und.schema["u"].dataType
-    if isinstance(u_dt, _INTEGRAL) and und.count() <= _DRIVER_GRAPH_MAX_EDGES:
-        spark = edges.sparkSession
-        updf = und.toPandas()  # Arrow transfer, bounded by the gate
-        und.unpersist(False)
-        cur_pairs = set(zip(updf["u"].tolist(), updf["v"].tolist()))
-        for _ in range(rounds):
-            deg: dict = {}
+    cur = None
+    try:
+        u_dt = und.schema["u"].dataType
+        if isinstance(u_dt, _INTEGRAL) and und.count() <= _DRIVER_GRAPH_MAX_EDGES:
+            spark = edges.sparkSession
+            updf = und.toPandas()  # Arrow transfer, bounded by the gate
+            cur_pairs = set(zip(updf["u"].tolist(), updf["v"].tolist()))
+            for _ in range(rounds):
+                deg: dict = {}
+                for u, v in cur_pairs:
+                    deg[u] = deg.get(u, 0) + 1
+                    deg[v] = deg.get(v, 0) + 1
+                keep = {n for n, d in deg.items() if d >= k}
+                cur_pairs = {
+                    (u, v) for (u, v) in cur_pairs if u in keep and v in keep
+                }
+            core_deg: dict = {}
             for u, v in cur_pairs:
-                deg[u] = deg.get(u, 0) + 1
-                deg[v] = deg.get(v, 0) + 1
-            keep = {n for n, d in deg.items() if d >= k}
-            cur_pairs = {
-                (u, v) for (u, v) in cur_pairs if u in keep and v in keep
-            }
-        core_deg: dict = {}
-        for u, v in cur_pairs:
-            core_deg[u] = core_deg.get(u, 0) + 1
-            core_deg[v] = core_deg.get(v, 0) + 1
-        schema = T.StructType(
-            [
-                T.StructField("node", u_dt),
-                T.StructField("core_deg", T.LongType()),
-            ]
-        )
-        return spark.createDataFrame(sorted(core_deg.items()), schema)
-    cur = und
-    for _ in range(rounds):
-        deg = (
+                core_deg[u] = core_deg.get(u, 0) + 1
+                core_deg[v] = core_deg.get(v, 0) + 1
+            schema = T.StructType(
+                [
+                    T.StructField("node", u_dt),
+                    T.StructField("core_deg", T.LongType()),
+                ]
+            )
+            return spark.createDataFrame(sorted(core_deg.items()), schema)
+        cur = und
+        for _ in range(rounds):
+            deg = (
+                cur.select(F.col("u").alias("node"))
+                .unionByName(cur.select(F.col("v").alias("node")))
+                .groupBy("node")
+                .agg(F.count(F.lit(1)).alias("deg"))
+            )
+            keep = deg.filter(F.col("deg") >= k).select("node")
+            nxt = (
+                cur.join(keep.withColumnRenamed("node", "u"), "u", "left_semi")
+                .join(keep.withColumnRenamed("node", "v"), "v", "left_semi")
+                .select("u", "v")
+                .localCheckpoint(eager=True)
+            )
+            release(cur)
+            cur = nxt
+        return (
             cur.select(F.col("u").alias("node"))
             .unionByName(cur.select(F.col("v").alias("node")))
             .groupBy("node")
-            .agg(F.count(F.lit(1)).alias("deg"))
+            .agg(F.count(F.lit(1)).cast("bigint").alias("core_deg"))
         )
-        keep = deg.filter(F.col("deg") >= k).select("node")
-        cur = (
-            cur.join(keep.withColumnRenamed("node", "u"), "u", "left_semi")
-            .join(keep.withColumnRenamed("node", "v"), "v", "left_semi")
-            .select("u", "v")
-            .localCheckpoint(eager=True)
-        )
-    # cur was eagerly checkpointed every round, so the returned frame
-    # only references the cached simple-edge set when rounds == 0 — and
-    # persist kept lineage, so unpersisting is safe even then
-    und.unpersist(False)
-    return (
-        cur.select(F.col("u").alias("node"))
-        .unionByName(cur.select(F.col("v").alias("node")))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("core_deg"))
-    )
+    except BaseException:
+        if cur is not None:
+            release(cur)
+        raise
+    finally:
+        # the returned frame only reads the simple-edge set when
+        # rounds == 0, and persist kept lineage, so this is safe even then
+        und.unpersist(False)
 
 
 def label_propagation(
@@ -441,82 +454,90 @@ def label_propagation(
         and edges.schema[dst_col].dataType == src_dt
     )
     edges = edges.select(src_col, dst_col).persist(StorageLevel.MEMORY_AND_DISK)
-    small = False
-    if type_ok:
-        row = edges.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.count(src_col).alias("ns"),
-            F.count(dst_col).alias("nd"),
-        ).first()
-        small = (
-            row["n"] <= _DRIVER_GRAPH_MAX_EDGES
-            and row["ns"] == row["n"]
-            and row["nd"] == row["n"]
-        )
-    if small:
-        epdf = edges.toPandas()
-        edges.unpersist(False)
-        spark = edges.sparkSession
-        out_adj: dict = {}
-        node_set: set = set()
-        for s, d in zip(epdf[src_col].tolist(), epdf[dst_col].tolist()):
-            out_adj.setdefault(s, []).append(d)
-            node_set.add(s)
-            node_set.add(d)
-        lab = {n: n for n in node_set}
-        for _ in range(rounds):
-            new_lab = dict(lab)
-            for n, outs in out_adj.items():
-                cnt: dict = {}
-                for d in outs:
-                    dl = lab[d]
-                    cnt[dl] = cnt.get(dl, 0) + 1
-                new_lab[n] = min(cnt.items(), key=lambda kv: (-kv[1], kv[0]))[0]
-            lab = new_lab
-        schema = T.StructType(
-            [
-                T.StructField("node", src_dt),
-                T.StructField("label", src_dt),
-            ]
-        )
-        return spark.createDataFrame(sorted(lab.items()), schema)
-    nodes = (
-        edges.select(F.col(src_col).alias("node"))
-        .unionByName(edges.select(F.col(dst_col).alias("node")))
-        .distinct()
-    )
-    labels = nodes.select("node", F.col("node").alias("label")).localCheckpoint(
-        eager=True
-    )
-    for _ in range(rounds):
-        neigh = edges.join(
-            labels.withColumnRenamed("node", "_ln"),
-            F.col(dst_col) == F.col("_ln"),
-        ).select(F.col(src_col).alias("node"), "label")
-        counts = neigh.groupBy("node", "label").agg(
-            F.count(F.lit(1)).alias("c")
-        )
-        w = Window.partitionBy("node").orderBy(
-            F.col("c").desc(), F.col("label").asc()
-        )
-        best = (
-            counts.withColumn("_rk", F.row_number().over(w))
-            .filter(F.col("_rk") == 1)
-            .select("node", "label")
-        )
-        # nodes with no in-edges keep their current label
-        labels = (
-            labels.join(best.withColumnRenamed("label", "_new"), "node", "left")
-            .select(
-                "node",
-                F.coalesce(F.col("_new"), F.col("label")).alias("label"),
+    labels = None
+    try:
+        small = False
+        if type_ok:
+            row = edges.agg(
+                F.count(F.lit(1)).alias("n"),
+                F.count(src_col).alias("ns"),
+                F.count(dst_col).alias("nd"),
+            ).first()
+            small = (
+                row["n"] <= _DRIVER_GRAPH_MAX_EDGES
+                and row["ns"] == row["n"]
+                and row["nd"] == row["n"]
             )
-            .localCheckpoint(eager=True)
+        if small:
+            epdf = edges.toPandas()
+            spark = edges.sparkSession
+            out_adj: dict = {}
+            node_set: set = set()
+            for s, d in zip(epdf[src_col].tolist(), epdf[dst_col].tolist()):
+                out_adj.setdefault(s, []).append(d)
+                node_set.add(s)
+                node_set.add(d)
+            lab = {n: n for n in node_set}
+            for _ in range(rounds):
+                new_lab = dict(lab)
+                for n, outs in out_adj.items():
+                    cnt: dict = {}
+                    for d in outs:
+                        dl = lab[d]
+                        cnt[dl] = cnt.get(dl, 0) + 1
+                    new_lab[n] = min(cnt.items(), key=lambda kv: (-kv[1], kv[0]))[0]
+                lab = new_lab
+            schema = T.StructType(
+                [
+                    T.StructField("node", src_dt),
+                    T.StructField("label", src_dt),
+                ]
+            )
+            return spark.createDataFrame(sorted(lab.items()), schema)
+        nodes = (
+            edges.select(F.col(src_col).alias("node"))
+            .unionByName(edges.select(F.col(dst_col).alias("node")))
+            .distinct()
         )
-    # labels was eagerly checkpointed every round, so the returned
-    # frame no longer references the cached edge projection
-    edges.unpersist(False)
-    return labels
+        labels = nodes.select("node", F.col("node").alias("label")).localCheckpoint(
+            eager=True
+        )
+        for _ in range(rounds):
+            neigh = edges.join(
+                labels.withColumnRenamed("node", "_ln"),
+                F.col(dst_col) == F.col("_ln"),
+            ).select(F.col(src_col).alias("node"), "label")
+            counts = neigh.groupBy("node", "label").agg(
+                F.count(F.lit(1)).alias("c")
+            )
+            w = Window.partitionBy("node").orderBy(
+                F.col("c").desc(), F.col("label").asc()
+            )
+            best = (
+                counts.withColumn("_rk", F.row_number().over(w))
+                .filter(F.col("_rk") == 1)
+                .select("node", "label")
+            )
+            # nodes with no in-edges keep their current label
+            nxt = (
+                labels.join(best.withColumnRenamed("label", "_new"), "node", "left")
+                .select(
+                    "node",
+                    F.coalesce(F.col("_new"), F.col("label")).alias("label"),
+                )
+                .localCheckpoint(eager=True)
+            )
+            release(labels)
+            labels = nxt
+        return labels
+    except BaseException:
+        if labels is not None:
+            release(labels)
+        raise
+    finally:
+        # every returned frame is driver-built or eagerly checkpointed,
+        # so none of them reads the edge projection
+        edges.unpersist(False)
 
 
 def hits_fixed(

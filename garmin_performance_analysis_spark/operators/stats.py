@@ -34,90 +34,13 @@ def _dec_std(c: Column, sample: bool = True) -> Column:
     return F.when(den > 0, F.sqrt(F.greatest((sxx - sx * sx / n) / den, F.lit(0.0))))
 
 
-def _median_over_counts(
-    counts: DataFrame,
-    keys: Sequence[str],
-    bucketed: bool = False,
-    n_buckets: int = 64,
+def _interpolate_ranked(
+    ranked: DataFrame, keys: Sequence[str], *extra: Column
 ) -> DataFrame:
-    """Turn a per-distinct-value histogram ``(*keys, _v, _cnt)`` into
-    one row per key group: ``_median`` (percentile-0.5 semantics,
-    two-sided interpolation weights) + ``_n_distinct``.
-
-    Two shapes for the cumulative-count rank scan:
-
-    - ``bucketed=False``: one window partition per key group — right
-      when groups are many and individually small (per-activity stats):
-      parallelism comes from the group count, and no partition exceeds
-      a group's distinct-value count.
-    - ``bucketed=True``: right when there are FEW groups with HUGE
-      value domains (whole-table profiling) — a per-group window would
-      sort an entire column's distinct values in ONE task (the same
-      un-scalable shape as ``percentile``'s merge).  Instead: compute
-      ~``n_buckets`` ordered split points per group with
-      ``percentile_approx`` (the sketch only steers bucketing; the
-      result stays exact regardless of the split quality), take local
-      cumsums within each (group, bucket), then shift them by exclusive
-      per-bucket offsets from a buckets-count-sized side frame
-      (broadcast back).  Every task now touches ~1/n_buckets of a
-      column — the per-task memory bound survives unbounded value-domain
-      growth.  Honest cost note: at sf0.1 this shape is ~15% SLOWER than
-      the unbucketed scan (the counts subtree appears in three plan
-      branches and Catalyst only partially reuses the exchange), so it
-      is reserved for inputs whose per-group distinct set can outgrow a
-      task: pick by domain, not reflex.  Fixed-point metrics (2-dp
-      prices) have a bounded domain at any row count → unbucketed;
-      continuous domains (raw sensor doubles) grow with the data →
-      bucketed.
-    """
-    keys = list(keys)
-    if not bucketed:
-        w = Window.partitionBy(*keys).orderBy("_v")
-        tot = Window.partitionBy(*keys)
-        r = (F.sum("_cnt").over(tot) - 1) / 2.0
-        upto = F.sum("_cnt").over(w)
-        below = upto - F.col("_cnt")
-        ranked = counts.select(
-            *keys, "_v", "_cnt", r.alias("_r"), upto.alias("_upto"), below.alias("_below")
-        )
-    else:
-        qs = [i / n_buckets for i in range(1, n_buckets)]
-        splits = counts.groupBy(*keys).agg(
-            F.percentile_approx("_v", qs, 200).alias("_splits")
-        )
-        bucket = F.aggregate(
-            F.col("_splits"),
-            F.lit(0),
-            lambda acc, x: acc + F.when(F.col("_v") >= x, 1).otherwise(0),
-        )
-        withb = (
-            counts.join(F.broadcast(splits), keys)
-            .withColumn("_bucket", bucket)
-            .drop("_splits")
-        )
-        btot = withb.groupBy(*keys, "_bucket").agg(F.sum("_cnt").alias("_btot"))
-        w_off = Window.partitionBy(*keys).orderBy("_bucket")
-        w_all = Window.partitionBy(*keys)
-        offsets = btot.select(
-            *keys,
-            "_bucket",
-            (F.sum("_btot").over(w_off) - F.col("_btot")).alias("_offset"),
-            F.sum("_btot").over(w_all).alias("_total"),
-        )
-        w_local = Window.partitionBy(*keys, "_bucket").orderBy("_v")
-        local_upto = F.sum("_cnt").over(w_local)
-        ranked = (
-            withb.withColumn("_lupto", local_upto)
-            .join(F.broadcast(offsets), keys + ["_bucket"])
-            .select(
-                *keys,
-                "_v",
-                "_cnt",
-                ((F.col("_total") - 1) / 2.0).alias("_r"),
-                (F.col("_lupto") + F.col("_offset")).alias("_upto"),
-                (F.col("_lupto") + F.col("_offset") - F.col("_cnt")).alias("_below"),
-            )
-        )
+    """Final step shared by both exact-median shapes: given rows
+    ``(*keys, _v, _r, _upto, _below)`` covering at least the two
+    rank-bracketing values, emit ``(*keys, _median, *extra)`` with
+    ``percentile``'s two-sided interpolation weights."""
     r, upto, below = F.col("_r"), F.col("_upto"), F.col("_below")
     lo = F.when((below <= F.floor(r)) & (F.floor(r) < upto), F.col("_v"))
     hi = F.when((below <= F.ceil(r)) & (F.ceil(r) < upto), F.col("_v"))
@@ -139,193 +62,78 @@ def _median_over_counts(
             )
             .otherwise(F.max("_lo") * F.max("_wlo") + F.max("_hi") * F.max("_whi"))
             .alias("_median"),
-            F.count(F.lit(1)).alias("_n_distinct"),
+            *extra,
         )
     )
 
 
-def _interpolate_ranked(ranked: DataFrame, keys: Sequence[str]) -> DataFrame:
-    """Final step shared by every exact-median shape: given rows
-    ``(*keys, _v, _r, _upto, _below)`` covering at least the two
-    rank-bracketing values, emit ``(*keys, _median)`` with
-    ``percentile``'s two-sided interpolation weights."""
-    r, upto, below = F.col("_r"), F.col("_upto"), F.col("_below")
-    lo = F.when((below <= F.floor(r)) & (F.floor(r) < upto), F.col("_v"))
-    hi = F.when((below <= F.ceil(r)) & (F.ceil(r) < upto), F.col("_v"))
-    return (
-        ranked.select(
-            *keys,
-            lo.alias("_lo"),
-            hi.alias("_hi"),
-            (F.ceil(r) - r).alias("_wlo"),
-            (r - F.floor(r)).alias("_whi"),
-        )
-        .groupBy(*keys)
-        .agg(
-            F.when(
-                (F.max("_whi") == 0.0) | (F.max("_lo") == F.max("_hi")),
-                F.max("_lo"),
-            )
-            .otherwise(F.max("_lo") * F.max("_wlo") + F.max("_hi") * F.max("_whi"))
-            .alias("_median")
-        )
-    )
+def _median_over_counts(counts: DataFrame, keys: Sequence[str]) -> DataFrame:
+    """Turn a per-distinct-value histogram ``(*keys, _v, _cnt)`` into
+    one row per key group: ``_median`` (percentile-0.5 semantics,
+    two-sided interpolation weights) + ``_n_distinct``.
 
-
-def selected_median(
-    df: DataFrame,
-    group_cols: Sequence[str],
-    metrics: Sequence[str],
-    accuracy: int = 200,
-    q_band: tuple = (0.4, 0.6),
-    small_n: int = 100,
-) -> DataFrame:
-    """Exact median with NO large sort anywhere — the
-    approximate-bracket / exact-select shape:
-
-    1. One aggregation pass per group per metric: count, min/max, and a
-       cheap ``percentile_approx`` bracket at ``q_band`` (rank error
-       ≤ n/accuracy = 0.005·n, vs a 0.1·n margin — 20× slack; the
-       bracket only has to CONTAIN the median ranks, the result never
-       depends on its quality).  Groups smaller than ``small_n`` use
-       min/max as the bracket (the discrete-rank guarantee of a sketch
-       is only meaningful once n ≫ the band width).
-    2. One exact counting pass: rows strictly below the bracket.
-    3. One candidate pass: rows inside the bracket (~20%), reduced to a
-       per-distinct-value histogram — the only frame that gets a
-       cumulative rank scan, and it is band-sized, not column-sized.
-
-    Median = interpolation at rank (n-1)/2 with global rank =
-    below + local cumsum.  Every shuffle is aggregation-sized; the
-    sort touches only the in-band distinct values.  This is the shape
-    that wins when few groups hold huge value sets (the windowed scan
-    of ``grouped_median`` sorts a whole group in one task; the bucketed
-    scan fixes memory but triples the counts subtree).  Measured on the
-    a1 block at sf0.1: 2.15 s (windowed) → ~1.0 s, and no task ever
-    holds more than the bracket slice.
-    Output: one row per group with ``{m}_median`` columns (all-null
-    metrics yield no row — left-join at the call site).
+    The windowed rank scan: one window partition per key group — right
+    when groups are many and individually small (per-activity stats):
+    parallelism comes from the group count, and no partition exceeds a
+    group's distinct-value count.  With FEW groups and HUGE value
+    domains (whole-table profiling) a group's whole distinct set sorts
+    in ONE task; bounded fixed-point domains avoid that with the grid
+    shape (``_grid_select``).
     """
-    qlo, qhi = q_band
-    keys = [*group_cols, "_metric"]
-    b_aggs = []
-    for m in metrics:
-        c = F.col(m)
-        b_aggs += [
-            F.count(c).alias(f"_n_{m}"),
-            F.min(c).cast("double").alias(f"_mn_{m}"),
-            F.max(c).cast("double").alias(f"_mx_{m}"),
-            F.percentile_approx(c.cast("double"), [qlo, qhi], accuracy).alias(
-                f"_q_{m}"
-            ),
-        ]
-    bounds = df.groupBy(*group_cols).agg(*b_aggs)
-    stack_b = ", ".join(
-        f"'{m}', _n_{m}, CASE WHEN _n_{m} < {small_n} THEN _mn_{m} ELSE _q_{m}[0] END,"
-        f" CASE WHEN _n_{m} < {small_n} THEN _mx_{m} ELSE _q_{m}[1] END"
-        for m in metrics
-    )
-    bounds_long = bounds.selectExpr(
-        *group_cols,
-        f"stack({len(metrics)}, {stack_b}) as (_metric, _n, _blo, _bhi)",
-    )
-    stack_v = ", ".join(f"'{m}', cast({m} as double)" for m in metrics)
-    long = df.selectExpr(
-        *group_cols, f"stack({len(metrics)}, {stack_v}) as (_metric, _v)"
-    ).filter(F.col("_v").isNotNull())
-    joined = long.join(F.broadcast(bounds_long), keys)
-    below = (
-        joined.filter(F.col("_v") < F.col("_blo"))
-        .groupBy(*keys)
-        .agg(F.count(F.lit(1)).alias("_nbelow"))
-    )
-    cand = (
-        joined.filter((F.col("_v") >= F.col("_blo")) & (F.col("_v") <= F.col("_bhi")))
-        .groupBy(*keys, "_n", "_v")
-        .agg(F.count(F.lit(1)).alias("_cnt"))
-        .join(below, keys, "left")
-        .withColumn("_nbelow", F.coalesce(F.col("_nbelow"), F.lit(0)))
-    )
+    keys = list(keys)
     w = Window.partitionBy(*keys).orderBy("_v")
-    ranked = cand.select(
-        *keys,
-        "_v",
-        ((F.col("_n") - 1) / 2.0).alias("_r"),
-        (F.col("_nbelow") + F.sum("_cnt").over(w)).alias("_upto"),
-        (F.col("_nbelow") + F.sum("_cnt").over(w) - F.col("_cnt")).alias("_below"),
+    tot = Window.partitionBy(*keys)
+    r = (F.sum("_cnt").over(tot) - 1) / 2.0
+    upto = F.sum("_cnt").over(w)
+    below = upto - F.col("_cnt")
+    ranked = counts.select(
+        *keys, "_v", "_cnt", r.alias("_r"), upto.alias("_upto"), below.alias("_below")
     )
-    per_metric = _interpolate_ranked(ranked, keys)
-    return per_metric.groupBy(*group_cols).agg(
-        *[
-            F.max(F.when(F.col("_metric") == m, F.col("_median"))).alias(
-                f"{m}_median"
-            )
-            for m in metrics
-        ]
+    return _interpolate_ranked(
+        ranked, keys, F.count(F.lit(1)).alias("_n_distinct")
     )
 
 
-def grid_median(
-    df: DataFrame,
-    group_cols: Sequence[str],
-    grids: "dict[str, float]",
+def _grid_select(
+    coarse: DataFrame, values: DataFrame, keys: Sequence[str]
 ) -> DataFrame:
-    """Exact median for metrics with a KNOWN bounded value domain, via a
-    fixed coarse grid — deterministic, sketch-free, and no task ever
-    holds more than one grid cell:
+    """Exact median for metrics with a KNOWN bounded value domain, by
+    two-level selection over a fixed grid — deterministic, sketch-free,
+    and no rank window holds more than a cell histogram or two cells'
+    values.
 
-    1. Coarse pass: histogram of ``floor(v / grid)`` per group — the
-       cell count is ``domain_width / grid`` regardless of row count, so
-       the rank scan over cells is a tiny window (e.g. ~1000 cells for
-       2-dp prices with grid=100).
-    2. The 1–2 cells straddling ranks ``floor(r)``/``ceil(r)`` are
-       joined back (broadcast — one row per group) as a filter on a
-       second scan; only that cell's distinct values (≤ grid·10^scale)
-       get the fine rank scan, offset by the exact below-cell count.
+    ``coarse`` is the histogram ``(*keys, _cell, _cnt)`` of the non-null
+    values, one row per ``_cell = floor(v / grid)``: its size is
+    ``domain_width / grid`` regardless of row count, so the cumulative
+    scan over cells is a tiny window.  The 1–2 cells straddling ranks
+    ``floor(r)``/``ceil(r)`` are joined back (broadcast — one row per
+    group) as a filter on ``values`` ``(*keys, _cell, _v, _cnt)``, given
+    per row or per distinct value; only those cells' distinct values
+    (≤ grid·10^scale) get the fine rank scan, offset by the exact
+    below-cell count.  Returns ``(*keys, _median)``.
 
     This is the same two-level idea as the reference's own equal-width
     histogram tool (A10, ``readers/utility.py:254-264``) applied to rank
-    selection.  Right when the domain is bounded (fixed-point money,
-    bounded sensor ranges); for unbounded domains use
-    ``grouped_median(bucketed=True)`` (memory-safe) — this one's cell
-    width would not bound the fine pass.  Measured on a1's price column
-    at sf0.1: 1.35 s (windowed count scan) → ~0.75 s, two cheap scans
-    instead of one 600k-row count shuffle + single-task sorts.
-    Output: one row per group, ``{m}_median`` columns.
+    selection.  The cell width bounds the fine pass only when the domain
+    is bounded (fixed-point money, bounded sensor ranges).  Measured on
+    a1's price column at sf0.1: 1.35 s (windowed count scan) → ~0.75 s.
     """
-    metrics = list(grids)
-    keys = [*group_cols, "_metric"]
-    stack_v = ", ".join(
-        f"'{m}', cast({m} as double), floor(cast({m} as double) / {grids[m]!r}d)"
-        for m in metrics
-    )
-
-    def _long(cols):
-        return df.selectExpr(
-            *group_cols, f"stack({len(metrics)}, {stack_v}) as (_metric, _v, _cell)"
-        ).filter(F.col("_v").isNotNull()).select(*cols)
-
-    coarse = _long([*keys, "_cell"]).groupBy(*keys, "_cell").agg(
-        F.count(F.lit(1)).alias("_ccnt")
-    )
+    keys = list(keys)
     w_cell = Window.partitionBy(*keys).orderBy("_cell")
     w_all = Window.partitionBy(*keys)
-    n = F.sum("_ccnt").over(w_all)
-    upto_c = F.sum("_ccnt").over(w_cell)
-    below_c = upto_c - F.col("_ccnt")
+    n = F.sum("_cnt").over(w_all)
+    upto_c = F.sum("_cnt").over(w_cell)
+    below_c = upto_c - F.col("_cnt")
     r = (n - 1) / 2.0
-    targets = (
-        coarse.select(
-            *keys,
-            "_cell",
-            r.alias("_r"),
-            upto_c.alias("_upto_c"),
-            below_c.alias("_below_c"),
-        )
-        .filter(
-            (F.col("_below_c") <= F.ceil(F.col("_r")))
-            & (F.floor(F.col("_r")) < F.col("_upto_c"))
-        )
+    targets = coarse.select(
+        *keys,
+        "_cell",
+        r.alias("_r"),
+        upto_c.alias("_upto_c"),
+        below_c.alias("_below_c"),
+    ).filter(
+        (F.col("_below_c") <= F.ceil(F.col("_r")))
+        & (F.floor(F.col("_r")) < F.col("_upto_c"))
     )
     # 1-2 adjacent cells per group; collapse to one offset (the earliest
     # cell's exact below-count) so the fine cumsum spans both.
@@ -336,11 +144,13 @@ def grid_median(
         F.first("_r").alias("_r"),
     )
     fine = (
-        _long([*keys, "_v", "_cell"])
-        .join(F.broadcast(offsets), keys)
-        .filter((F.col("_cell") >= F.col("_cell_lo")) & (F.col("_cell") <= F.col("_cell_hi")))
+        values.join(F.broadcast(offsets), keys)
+        .filter(
+            (F.col("_cell") >= F.col("_cell_lo"))
+            & (F.col("_cell") <= F.col("_cell_hi"))
+        )
         .groupBy(*keys, "_r", "_nbelow", "_v")
-        .agg(F.count(F.lit(1)).alias("_cnt"))
+        .agg(F.sum("_cnt").alias("_cnt"))
     )
     w_v = Window.partitionBy(*keys).orderBy("_v")
     ranked = fine.select(
@@ -350,7 +160,15 @@ def grid_median(
         (F.col("_nbelow") + F.sum("_cnt").over(w_v)).alias("_upto"),
         (F.col("_nbelow") + F.sum("_cnt").over(w_v) - F.col("_cnt")).alias("_below"),
     )
-    per_metric = _interpolate_ranked(ranked, keys)
+    return _interpolate_ranked(ranked, keys)
+
+
+def _pivot_medians(
+    per_metric: DataFrame, group_cols: Sequence[str], metrics: Sequence[str]
+) -> DataFrame:
+    """``(*group_cols, _metric, _median)`` → one row per group with
+    ``{m}_median`` columns (all-null metrics yield no row — left-join at
+    the call site)."""
     return per_metric.groupBy(*group_cols).agg(
         *[
             F.max(F.when(F.col("_metric") == m, F.col("_median"))).alias(
@@ -365,7 +183,6 @@ def grouped_median(
     df: DataFrame,
     group_cols: Sequence[str],
     metrics: Sequence[str],
-    bucketed: bool = False,
     weight_col: str | None = None,
 ) -> DataFrame:
     """Exact per-group median for each metric, distributed: unpivot the
@@ -380,8 +197,6 @@ def grouped_median(
     Groups where a metric is entirely null get a NULL median (matching
     percentile-over-empty) via the caller's left join.
     Output: one row per group with ``{metric}_median`` columns.
-    ``bucketed=True`` switches the rank scan to the split-point shape —
-    see ``_median_over_counts`` for when each shape is right.
 
     ``weight_col``: treat each row as ``weight`` identical observations
     (integer multiplicity).  The median of the expanded multiset equals
@@ -398,17 +213,8 @@ def grouped_median(
     counts = long.groupBy(*group_cols, "_metric", "_v").agg(
         (F.sum(weight_col) if weight_col else F.count(F.lit(1))).alias("_cnt")
     )
-    per_metric = _median_over_counts(
-        counts, [*group_cols, "_metric"], bucketed=bucketed
-    )
-    return per_metric.groupBy(*group_cols).agg(
-        *[
-            F.max(F.when(F.col("_metric") == m, F.col("_median"))).alias(
-                f"{m}_median"
-            )
-            for m in metrics
-        ]
-    )
+    per_metric = _median_over_counts(counts, [*group_cols, "_metric"])
+    return _pivot_medians(per_metric, group_cols, metrics)
 
 
 _WIDE_B = 1 << 20
@@ -451,14 +257,13 @@ def _five_stat_fused_grid(
     sums (the ``_ls_avg``/``_ls_std`` integers, summed per cell then
     re-summed per group: BIGINT addition is associative, so the totals
     are bit-identical to the per-row pass), min/max, and the coarse
-    rank histogram — replacing five_stat_block's separate moments scan
-    + grid_median coarse scan (3 raw passes → 2; the fine pass still
+    rank histogram for ``_grid_select`` — replacing a separate moments
+    scan + coarse-histogram scan (3 raw passes → 2; the fine pass still
     re-scans, filtered to the 1-2 rank-straddling cells).  Null values
     land in a NULL cell so the group row count stays COUNT(*)-exact
-    while rank selection sees only non-null cells (grid_median's
-    filter).  Measured on a1 at sf0.1: 1.44 → ~1.2 s (the remaining
-    cost is the fine re-scan + fixed stage overhead), identical
-    values."""
+    while rank selection sees only non-null cells.  Measured on a1 at
+    sf0.1: 1.44 → ~1.2 s (the remaining cost is the fine re-scan +
+    fixed stage overhead), identical values."""
     f = 10**scale
     gcols = list(group_cols)
     stack_v = ", ".join(f"'{m}', cast({m} as double)" for m in metrics)
@@ -471,13 +276,14 @@ def _five_stat_fused_grid(
             grid_expr
         )
     v = F.col("_v")
+    cell = F.floor(v / grid_expr)
     q = F.floor(v * f + 0.5)
     q2 = q * q
     part = (
-        long.withColumn("_cell", F.floor(v / grid_expr))
+        long.withColumn("_cell", cell)
         .groupBy(*gcols, "_metric", "_cell")
         .agg(
-            F.count(F.lit(1)).alias("_ccnt"),
+            F.count(F.lit(1)).alias("_cnt"),
             F.count(v).alias("_nn"),
             F.sum(q).alias("_sq"),
             F.sum(((q2 - q2 % _WIDE_B) / _WIDE_B).cast("long")).alias("_shi"),
@@ -496,7 +302,7 @@ def _five_stat_fused_grid(
         return F.when(F.col("_metric") == m, col)
 
     aggs: list[Column] = [
-        F.sum(piv(m0, F.col("_ccnt"))).alias(count_col)
+        F.sum(piv(m0, F.col("_cnt"))).alias(count_col)
     ]
     for m in metrics:
         nn = F.sum(piv(m, F.col("_nn")))
@@ -517,69 +323,36 @@ def _five_stat_fused_grid(
         ]
     moments = part.groupBy(*gcols).agg(*aggs)
 
-    # rank selection over the SAME partials (grid_median's exact
-    # two-level logic; only non-null cells carry rank mass)
+    # rank selection: coarse cells from the SAME partials (only non-null
+    # cells carry rank mass), fine values from a filtered re-scan
     keys = [*gcols, "_metric"]
-    coarse = part.filter(F.col("_cell").isNotNull()).select(
-        *keys, "_cell", F.col("_ccnt")
-    )
-    w_cell = Window.partitionBy(*keys).orderBy("_cell")
-    w_all = Window.partitionBy(*keys)
-    n = F.sum("_ccnt").over(w_all)
-    upto_c = F.sum("_ccnt").over(w_cell)
-    below_c = upto_c - F.col("_ccnt")
-    r = (n - 1) / 2.0
-    targets = coarse.select(
-        *keys,
-        "_cell",
-        r.alias("_r"),
-        upto_c.alias("_upto_c"),
-        below_c.alias("_below_c"),
-    ).filter(
-        (F.col("_below_c") <= F.ceil(F.col("_r")))
-        & (F.floor(F.col("_r")) < F.col("_upto_c"))
-    )
-    offsets = targets.groupBy(*keys).agg(
-        F.min("_cell").alias("_cell_lo"),
-        F.max("_cell").alias("_cell_hi"),
-        F.min("_below_c").alias("_nbelow"),
-        F.first("_r").alias("_r"),
-    )
-    fine = (
-        long.filter(v.isNotNull())
-        .withColumn("_cell", F.floor(v / grid_expr))
-        .join(F.broadcast(offsets), keys)
-        .filter(
-            (F.col("_cell") >= F.col("_cell_lo"))
-            & (F.col("_cell") <= F.col("_cell_hi"))
-        )
-        .groupBy(*keys, "_r", "_nbelow", "_v")
-        .agg(F.count(F.lit(1)).alias("_cnt"))
-    )
-    w_v = Window.partitionBy(*keys).orderBy("_v")
-    ranked = fine.select(
-        *keys,
-        "_v",
-        "_r",
-        (F.col("_nbelow") + F.sum("_cnt").over(w_v)).alias("_upto"),
-        (F.col("_nbelow") + F.sum("_cnt").over(w_v) - F.col("_cnt")).alias(
-            "_below"
+    per_metric = _grid_select(
+        part.filter(F.col("_cell").isNotNull()).select(*keys, "_cell", "_cnt"),
+        long.filter(v.isNotNull()).select(
+            *keys, cell.alias("_cell"), "_v", F.lit(1).alias("_cnt")
         ),
+        keys,
     )
-    per_metric = _interpolate_ranked(ranked, keys)
-    medians = per_metric.groupBy(*gcols).agg(
-        *[
-            F.max(F.when(F.col("_metric") == m, F.col("_median"))).alias(
-                f"{m}_median"
-            )
-            for m in metrics
-        ]
+    return _join_medians(
+        moments, _pivot_medians(per_metric, gcols, metrics), gcols, metrics, count_col
     )
-    if gcols:
-        joined = moments.join(medians, gcols, "left")
+
+
+def _join_medians(
+    moments: DataFrame,
+    medians: DataFrame,
+    group_cols: Sequence[str],
+    metrics: Sequence[str],
+    count_col: str,
+) -> DataFrame:
+    """Join the per-group medians onto the moments and order the
+    five-stat columns: ``count_col`` then ``{m}_{avg,median,stddev,
+    min,max}`` per metric."""
+    if group_cols:
+        joined = moments.join(medians, list(group_cols), "left")
     else:
         joined = moments.crossJoin(medians)
-    order = [*gcols, count_col]
+    order = [*group_cols, count_col]
     for m in metrics:
         order += [f"{m}_avg", f"{m}_median", f"{m}_stddev", f"{m}_min", f"{m}_max"]
     return joined.select(*order)
@@ -591,7 +364,6 @@ def five_stat_block(
     metrics: Sequence[str],
     count_col: str = "n",
     fixed_scale: int | None = None,
-    median_mode: str = "window",
     median_grids: "dict[str, float] | None" = None,
 ) -> DataFrame:
     """AVG/MEDIAN/STDDEV/MIN/MAX per metric per group + row count.
@@ -612,24 +384,19 @@ def five_stat_block(
     longs (primitive codegen) instead of DECIMALs — same exactness,
     ~2× on the moments pass.
 
-    ``median_mode``: "window" (per-group rank scan — groups are many
-    and small), "bucketed" (split-point scan — few groups, huge
-    domains, memory-bounded), or "select" (approx-bracket exact
-    selection — few groups, huge domains, no large sort; fastest when
-    the bracket pass can piggyback on cheap scans), or "grid"
-    (two-level fixed-grid selection via ``median_grids`` — bounded
-    domains, cheapest of the scale-safe shapes).  All shapes produce
-    bit-identical medians (property-tested).
+    ``median_grids``: ``{metric: cell width}`` for fixed-point metrics
+    with a bounded domain; requires ``fixed_scale``.  One fused scan
+    then yields the moments and the coarse cell histogram, and the
+    median comes from two-level grid selection (``_grid_select``)
+    instead of the per-group rank scan — few groups, huge domains, no
+    column-sized sort.  Both shapes produce bit-identical medians
+    (property-tested).
     """
-    if median_mode == "grid" and fixed_scale is not None:
-        # fixed-point bounded-domain metrics: the fused two-scan plan
+    if median_grids:
+        if fixed_scale is None:
+            raise ValueError("median_grids requires fixed_scale")
         return _five_stat_fused_grid(
-            df,
-            group_cols,
-            metrics,
-            count_col,
-            fixed_scale,
-            median_grids or {m: 1.0 for m in metrics},
+            df, group_cols, metrics, count_col, fixed_scale, median_grids
         )
     aggs: list[Column] = [F.count(F.lit(1)).alias(count_col)]
     for m in metrics:
@@ -645,24 +412,8 @@ def five_stat_block(
             F.max(c).alias(f"{m}_max"),
         ]
     moments = df.groupBy(*group_cols).agg(*aggs)
-    if median_mode == "grid":
-        medians = grid_median(
-            df, group_cols, median_grids or {m: 1.0 for m in metrics}
-        )
-    elif median_mode == "select":
-        medians = selected_median(df, group_cols, metrics)
-    else:
-        medians = grouped_median(
-            df, group_cols, metrics, bucketed=(median_mode == "bucketed")
-        )
-    if group_cols:
-        joined = moments.join(medians, list(group_cols), "left")
-    else:
-        joined = moments.crossJoin(medians)
-    order = [*group_cols, count_col]
-    for m in metrics:
-        order += [f"{m}_avg", f"{m}_median", f"{m}_stddev", f"{m}_min", f"{m}_max"]
-    return joined.select(*order)
+    medians = grouped_median(df, group_cols, metrics)
+    return _join_medians(moments, medians, group_cols, metrics, count_col)
 
 
 def time_range_stats(
@@ -756,9 +507,7 @@ def category_distribution(
     return counts.withColumn(frac_col, F.col("n") / total)
 
 
-def histogram_median(
-    df: DataFrame, columns: Sequence[str], bucketed: bool = False
-) -> DataFrame:
+def histogram_median(df: DataFrame, columns: Sequence[str]) -> DataFrame:
     """Exact whole-table median per column, fully distributed: unpivot
     to ``(column_name, value)``, count per distinct value, cumulative
     count ordered by value, then linear interpolation at rank
@@ -770,12 +519,10 @@ def histogram_median(
     Why not ``percentile``: its final merge pulls every value of a
     column into ONE task's memory (single-group aggregate), a hard OOM
     at large inputs.  Here the only per-task state is the distinct-value
-    histogram slice.  Pass ``bucketed=True`` for columns whose distinct
-    set can outgrow one task (continuous domains): a whole-table profile
-    has few key groups (one per column), so the unbucketed scan sorts a
-    column's entire distinct set in a single task — fine for bounded
-    fixed-point domains, a hazard for unbounded ones (see
-    ``_median_over_counts`` for the trade).
+    histogram slice.  A whole-table profile has few key groups (one per
+    column), so the rank scan sorts a column's entire distinct set in a
+    single task — fine for bounded fixed-point domains, which can take
+    the grid shape instead (``profile_columns(grids=...)``).
     Returns ``(column_name, stat_median, stat_n_distinct)``; all-null
     columns produce no row (left-join them back as NULL, = percentile of
     empty set).  The distinct count rides the same frame: distinct
@@ -789,7 +536,7 @@ def histogram_median(
     ).filter(F.col("_v").isNotNull())
     counts = long.groupBy("column_name", "_v").agg(F.count(F.lit(1)).alias("_cnt"))
     return (
-        _median_over_counts(counts, ["column_name"], bucketed=bucketed)
+        _median_over_counts(counts, ["column_name"])
         .withColumnRenamed("_median", "stat_median")
         .withColumnRenamed("_n_distinct", "stat_n_distinct")
     )
@@ -808,15 +555,13 @@ def _profile_fused_grid(
     count (bit-identical to the per-row ``_ls_avg``/``_ls_std`` sums,
     since integer addition is associative), null rate and row count
     from the counts, exact n_distinct = non-null histogram rows, and
-    the median via the same two-level grid selection as
-    ``grid_median`` with the fine pass FILTERING the histogram instead
-    of re-scanning the table.  This replaced profile_columns' grids
-    shape (moments scan + coarse scan + fine scan + distinct scan =
-    4 raw passes, 3 of them stack-tripled).  Locally the wall barely
-    moves (~1.7 → ~1.6 s at sf0.1: the per-value shuffle — the
-    exact-distinct cost the profiler already paid — dominates either
-    way), but at scan-bound scale the 4×→1× raw-pass cut is the whole
-    point.  The rank windows stay bounded at any scale (cells ≤
+    the median via ``_grid_select`` with the fine pass FILTERING the
+    histogram instead of re-scanning the table.  This replaced a grids
+    shape of 4 raw passes, 3 of them stack-tripled (moments, coarse,
+    fine and distinct scans).  Locally the wall barely moves (~1.7 →
+    ~1.6 s at sf0.1: the per-value shuffle — the exact-distinct cost
+    the profiler already paid — dominates either way), but at
+    scan-bound scale the 4×→1× raw-pass cut is the whole point.  The rank windows stay bounded at any scale (cells ≤
     domain/grid, fine rows ≤ 2 cells × grid·10^scale)."""
     f = 10**fixed_scale
     stack_v = ", ".join(f"'{m}', cast({m} as double)" for m in columns)
@@ -825,7 +570,7 @@ def _profile_fused_grid(
             f"stack({len(columns)}, {stack_v}) as (column_name, _v)"
         )
         .groupBy("column_name", "_v")
-        .agg(F.count(F.lit(1)).alias("_c"))
+        .agg(F.count(F.lit(1)).alias("_cnt"))
         # feeds two consumers (the stats aggregation and the median
         # selection) — no cross-subtree CSE, so checkpoint once.
         # EAGER: with a lazy checkpoint the two consumers' stages run
@@ -833,10 +578,9 @@ def _profile_fused_grid(
         # (measured: 1.7 s lazy vs 1.0 s eager at sf0.1)
         .localCheckpoint(eager=True)
     )
-    v, c = F.col("_v"), F.col("_c")
+    v, c = F.col("_v"), F.col("_cnt")
     q = F.floor(v * f + 0.5)
     q2 = q * q
-    nn = F.sum(F.when(v.isNotNull(), c)).alias  # non-null rows
     n_nonnull = F.sum(F.when(v.isNotNull(), c))
     sx = F.sum(F.when(v.isNotNull(), q * c)).cast("double") / float(f)
     hi = F.sum(F.when(v.isNotNull(), ((q2 - q2 % _WIDE_B) / _WIDE_B).cast("long") * c)).cast("double")
@@ -863,8 +607,8 @@ def _profile_fused_grid(
         ).alias("stat_null_rate"),
         F.count(F.when(v.isNotNull(), 1)).cast("double").alias("stat_n_distinct"),
     )
-    # two-level grid median over the histogram (grid_median's exact
-    # logic; counts are the same integers, so values are identical)
+    # two-level grid median over the histogram (counts are the same
+    # integers as a row scan's, so values are identical)
     grid_expr = F.lit(None).cast("double")
     for m, g in grids.items():
         grid_expr = F.when(F.col("column_name") == m, F.lit(float(g))).otherwise(grid_expr)
@@ -872,47 +616,8 @@ def _profile_fused_grid(
         "_cell", F.floor(v / grid_expr)
     )
     keys = ["column_name"]
-    coarse = cells.groupBy(*keys, "_cell").agg(F.sum(c).alias("_ccnt"))
-    w_cell = Window.partitionBy(*keys).orderBy("_cell")
-    w_all = Window.partitionBy(*keys)
-    n = F.sum("_ccnt").over(w_all)
-    upto_c = F.sum("_ccnt").over(w_cell)
-    below_c = upto_c - F.col("_ccnt")
-    r = (n - 1) / 2.0
-    targets = coarse.select(
-        *keys,
-        "_cell",
-        r.alias("_r"),
-        upto_c.alias("_upto_c"),
-        below_c.alias("_below_c"),
-    ).filter(
-        (F.col("_below_c") <= F.ceil(F.col("_r")))
-        & (F.floor(F.col("_r")) < F.col("_upto_c"))
-    )
-    offsets = targets.groupBy(*keys).agg(
-        F.min("_cell").alias("_cell_lo"),
-        F.max("_cell").alias("_cell_hi"),
-        F.min("_below_c").alias("_nbelow"),
-        F.first("_r").alias("_r"),
-    )
-    fine = (
-        cells.join(F.broadcast(offsets), keys)
-        .filter(
-            (F.col("_cell") >= F.col("_cell_lo"))
-            & (F.col("_cell") <= F.col("_cell_hi"))
-        )
-        .groupBy(*keys, "_r", "_nbelow", "_v")
-        .agg(F.sum("_c").alias("_cnt"))
-    )
-    w_v = Window.partitionBy(*keys).orderBy("_v")
-    ranked = fine.select(
-        *keys,
-        "_v",
-        "_r",
-        (F.col("_nbelow") + F.sum("_cnt").over(w_v)).alias("_upto"),
-        (F.col("_nbelow") + F.sum("_cnt").over(w_v) - F.col("_cnt")).alias("_below"),
-    )
-    med = _interpolate_ranked(ranked, keys).withColumnRenamed(
+    coarse = cells.groupBy(*keys, "_cell").agg(F.sum(c).alias("_cnt"))
+    med = _grid_select(coarse, cells, keys).withColumnRenamed(
         "_median", "stat_median"
     )
     return base.join(F.broadcast(med), keys, "left").select(
@@ -931,7 +636,6 @@ def _profile_fused_grid(
 def profile_columns(
     df: DataFrame,
     columns: Sequence[str],
-    bucketed: bool = False,
     grids: "dict[str, float] | None" = None,
     fixed_scale: int | None = None,
 ) -> DataFrame:
@@ -952,10 +656,15 @@ def profile_columns(
     single-group ``percentile`` merge also cannot scale — it buffers a
     whole column in one task; the histogram never holds more than a
     slice per task.
+
+    ``grids``: ``{column: cell width}`` for fixed-point columns with a
+    bounded domain; requires ``fixed_scale``.  The profile then comes
+    from one fused histogram scan with grid-selected medians (see
+    ``_profile_fused_grid``).
     """
-    if grids and fixed_scale is not None:
-        # bounded-domain fixed-point columns: the single-scan fused
-        # histogram plan (see _profile_fused_grid)
+    if grids:
+        if fixed_scale is None:
+            raise ValueError("grids requires fixed_scale")
         return _profile_fused_grid(df, columns, grids, fixed_scale)
     basic: list[Column] = [F.count(F.lit(1)).alias("_rows")]
     for m in columns:
@@ -983,31 +692,9 @@ def profile_columns(
         f"stack({len(columns)}, {stack_args}) as "
         f"(column_name, {', '.join('stat_' + s for s in stats)})",
     )
-    if grids:
-        # bounded-domain columns: grid selection for the median (no
-        # column-sized sort anywhere) + a two-level aggregation for the
-        # exact distinct count (groupBy value, then count rows — an
-        # agg-only plan; no rank scan is needed for counting)
-        med = grid_median(df, [], grids).selectExpr(
-            f"stack({len(columns)}, "
-            + ", ".join(f"'{m}', {m}_median" for m in columns)
-            + ") as (column_name, stat_median)"
-        )
-        stack_v = ", ".join(f"'{m}', cast({m} as double)" for m in columns)
-        long = df.selectExpr(
-            f"stack({len(columns)}, {stack_v}) as (column_name, _v)"
-        ).filter(F.col("_v").isNotNull())
-        dist = (
-            long.groupBy("column_name", "_v")
-            .agg(F.count(F.lit(1)).alias("_c"))
-            .groupBy("column_name")
-            .agg(F.count(F.lit(1)).cast("double").alias("stat_n_distinct"))
-        )
-        hist = med.join(dist, "column_name", "left")
-    else:
-        hist = histogram_median(df, columns, bucketed=bucketed).withColumn(
-            "stat_n_distinct", F.col("stat_n_distinct").cast("double")
-        )
+    hist = histogram_median(df, columns).withColumn(
+        "stat_n_distinct", F.col("stat_n_distinct").cast("double")
+    )
     return unpivoted.join(hist, "column_name", "left").withColumn(
         # an all-null column has no histogram row: COUNT(DISTINCT) = 0,
         # median stays NULL (percentile of the empty set)
@@ -1061,9 +748,10 @@ def weighted_median(
 ) -> DataFrame:
     """Exact lower weighted median per group: the smallest value whose
     cumulative weight reaches half the group's total — the robust
-    center the plain median family (selected/grid/histogram medians
-    above) can't express when observations carry unequal mass
-    (duration-weighted paces, token-weighted quality scores).
+    center the plain exact medians above (``grouped_median``,
+    ``histogram_median`` and the grid selection) can't express when
+    observations carry unequal mass (duration-weighted paces,
+    token-weighted quality scores).
 
     ``weight_col`` must be INTEGER-valued (scale fixed-point weights
     upstream): the `2·cum >= tot` crossing test is then exact integer
@@ -1077,13 +765,13 @@ def weighted_median(
     by the group key, never global — and a min-combine on the crossing
     rows.  Three exchanges, all hashed on the group key.
 
-    ``grid``: for bounded fixed-point value domains, the grid_median
-    two-level shape — a coarse cell histogram finds the half-weight
+    ``grid``: for bounded fixed-point value domains, the
+    ``_grid_select`` two-level shape — a coarse cell histogram finds the half-weight
     crossing CELL (cell-cardinality windows, bounded at any scale),
     and only that cell's values get the fine cumulative scan.  This
     replaces the per-group ordered window over every distinct value
     (a single-task column sort per group when groups are few — the
-    exact shape grid_median exists to avoid).  Identical results for
+    exact shape the grid selection exists to avoid).  Identical results for
     non-null values by the same integer arithmetic; the grid path
     requires ``value_col`` non-null (a NULL carries no weight there,
     while the default path's NULLS-FIRST window would count it).

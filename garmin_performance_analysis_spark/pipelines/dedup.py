@@ -22,6 +22,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
+from ..plans.materialize import release
+
 
 def exact_duplicates(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """Exact dedup by content hash: groups with >1 doc, keeping the min
@@ -394,84 +396,93 @@ def connected_components(
         .distinct()
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    n_edges = edges.count()
-    if n_edges <= _DRIVER_CC_MAX_EDGES:
-        # size-gated driver solve: the pair graph is usually a tiny
-        # fraction of the corpus (near-dup pairs), and each pointer-
-        # jumping round costs 2+ Spark jobs of pure choreography.
-        # Below the gate (≤ ~3 MB of edge longs) a driver union-find
-        # computes the SAME unique fixpoint (min reachable id per
-        # node) in one bounded collect; above it the distributed loop
-        # below is unchanged — the scale path stays the default.
-        spark = pairs.sparkSession
-        parent: dict = {}
+    labels = None
+    try:
+        n_edges = edges.count()
+        if n_edges <= _DRIVER_CC_MAX_EDGES:
+            # size-gated driver solve: the pair graph is usually a tiny
+            # fraction of the corpus (near-dup pairs), and each pointer-
+            # jumping round costs 2+ Spark jobs of pure choreography.
+            # Below the gate (≤ ~3 MB of edge longs) a driver union-find
+            # computes the SAME unique fixpoint (min reachable id per
+            # node) in one bounded collect; above it the distributed loop
+            # below is unchanged — the scale path stays the default.
+            spark = pairs.sparkSession
+            parent: dict = {}
 
-        def find(x: int) -> int:
-            r = x
-            while parent.get(r, r) != r:
-                r = parent[r]
-            while parent.get(x, x) != r:  # path compression
-                parent[x], x = r, parent[x]
-            return r
+            def find(x: int) -> int:
+                r = x
+                while parent.get(r, r) != r:
+                    r = parent[r]
+                while parent.get(x, x) != r:  # path compression
+                    parent[x], x = r, parent[x]
+                return r
 
-        nodes: set = set()
-        rows = edges.collect()  # bounded by the gate above
-        edges.unpersist(False)
-        for row in rows:
-            nodes.add(row[0])
-            a, b = find(row[0]), find(row[1])
-            if a != b:
-                # union by MIN id: the winning root is always the
-                # component's minimum node id, which is exactly the
-                # distributed loop's fixpoint label
-                if b < a:
-                    a, b = b, a
-                parent[b] = a
-        return spark.createDataFrame(
-            sorted((n, find(n)) for n in nodes), "doc_id long, cluster_id long"
-        )
-    labels = (
-        edges.select(F.col("src").alias("node"))
-        .distinct()
-        .withColumn("label", F.col("node"))
-        .localCheckpoint(eager=True)
-    )
-    prev_sum = labels.agg(F.sum("label")).first()[0]
-    for _ in range(max_iter):
-        neigh = (
-            edges.join(labels, edges["src"] == labels["node"])
-            .groupBy(edges["dst"].alias("node2"))
-            .agg(F.min("label").alias("_nmin"))
-        )
-        hop = labels.select(
-            F.col("node").alias("lnode"), F.col("label").alias("_lmin")
-        )
-        jumped = (
-            labels.join(neigh, labels["node"] == neigh["node2"], "left")
-            .join(hop, labels["label"] == hop["lnode"], "left")
-            .select(
-                "node",
-                F.least(
-                    F.col("label"),
-                    F.coalesce(F.col("_nmin"), F.col("label")),
-                    F.coalesce(F.col("_lmin"), F.col("label")),
-                ).alias("label"),
+            nodes: set = set()
+            rows = edges.collect()  # bounded by the gate above
+            for row in rows:
+                nodes.add(row[0])
+                a, b = find(row[0]), find(row[1])
+                if a != b:
+                    # union by MIN id: the winning root is always the
+                    # component's minimum node id, which is exactly the
+                    # distributed loop's fixpoint label
+                    if b < a:
+                        a, b = b, a
+                    parent[b] = a
+            return spark.createDataFrame(
+                sorted((n, find(n)) for n in nodes), "doc_id long, cluster_id long"
             )
+        labels = (
+            edges.select(F.col("src").alias("node"))
+            .distinct()
+            .withColumn("label", F.col("node"))
             .localCheckpoint(eager=True)
         )
-        labels = jumped
-        new_sum = labels.agg(F.sum("label")).first()[0]
-        if new_sum == prev_sum:
-            break
-        prev_sum = new_sum
-    else:
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iter} rounds"
+        prev_sum = labels.agg(F.sum("label")).first()[0]
+        for _ in range(max_iter):
+            neigh = (
+                edges.join(labels, edges["src"] == labels["node"])
+                .groupBy(edges["dst"].alias("node2"))
+                .agg(F.min("label").alias("_nmin"))
+            )
+            hop = labels.select(
+                F.col("node").alias("lnode"), F.col("label").alias("_lmin")
+            )
+            jumped = (
+                labels.join(neigh, labels["node"] == neigh["node2"], "left")
+                .join(hop, labels["label"] == hop["lnode"], "left")
+                .select(
+                    "node",
+                    F.least(
+                        F.col("label"),
+                        F.coalesce(F.col("_nmin"), F.col("label")),
+                        F.coalesce(F.col("_lmin"), F.col("label")),
+                    ).alias("label"),
+                )
+                .localCheckpoint(eager=True)
+            )
+            release(labels)
+            labels = jumped
+            new_sum = labels.agg(F.sum("label")).first()[0]
+            if new_sum == prev_sum:
+                break
+            prev_sum = new_sum
+        else:
+            raise RuntimeError(
+                f"connected_components did not converge in {max_iter} rounds"
+            )
+        return labels.select(
+            F.col("node").alias("doc_id"), F.col("label").alias("cluster_id")
         )
-    # labels was eagerly checkpointed every round, so the returned
-    # frame no longer references the cached doubled-edge set
-    edges.unpersist(False)
-    return labels.select(F.col("node").alias("doc_id"), F.col("label").alias("cluster_id"))
+    except BaseException:
+        if labels is not None:
+            release(labels)
+        raise
+    finally:
+        # every returned frame is driver-built or eagerly checkpointed,
+        # so none of them reads the doubled-edge set
+        edges.unpersist(False)
 
 
 def contamination_stats(

@@ -27,6 +27,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..plans.materialize import release
+
 MONTH_COL = "_month"
 
 
@@ -106,13 +108,16 @@ def delete_insert_by_key(
     # out's lineage reads `path`, so evaluating it after the overwrite
     # would re-read the mutated table).
     out = kept.unionByName(incoming).localCheckpoint(eager=True)
-    out_months = {r[0] for r in out.select(MONTH_COL).distinct().collect()}
-    (
-        out.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(MONTH_COL)
-        .parquet(path)
-    )
+    try:
+        out_months = {r[0] for r in out.select(MONTH_COL).distinct().collect()}
+        (
+            out.write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy(MONTH_COL)
+            .parquet(path)
+        )
+    finally:
+        release(out)
     # Dynamic overwrite only replaces partitions PRESENT in the output.
     # A month emptied by the DELETE (its only rows belonged to moved
     # keys) writes nothing, so drop its directory explicitly.

@@ -73,8 +73,7 @@ def _state_partitions(src_dirs: list[str], session_default: int) -> int:
     constant).  Floor 2 keeps cross-partition state semantics
     exercised; cap at the session's shuffle parallelism so a replay
     never out-fans the session.  The replay harness stages sources on
-    a local filesystem by construction, so a directory walk is exact;
-    cluster jobs size state explicitly via ``shuffle_partitions``."""
+    a local filesystem by construction, so a directory walk is exact."""
     total = 0
     for d in src_dirs:
         for dirpath, _, files in os.walk(d):
@@ -123,7 +122,6 @@ def _single_run(
     batches: list[DataFrame],
     work_dir: str,
     build,
-    shuffle_partitions: int | None,
 ) -> str:
     """Shared single-query replay scaffold: stage the batches, size
     the state partitions from the staged bytes, and run ONE
@@ -140,11 +138,7 @@ def _single_run(
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     prev_multi = spark.conf.get(_ALLOW_MULTIPLE_CONF, "true")
     try:
-        n_parts = (
-            shuffle_partitions
-            if shuffle_partitions is not None
-            else _state_partitions([src], int(prev))
-        )
+        n_parts = _state_partitions([src], int(prev))
         spark.conf.set("spark.sql.shuffle.partitions", str(n_parts))
         # Single-watermark mode (every replay has exactly ONE stateful
         # operator): late events filter against the CURRENT batch's
@@ -180,7 +174,6 @@ def _multi_run(
     batches: list[DataFrame],
     work_dir: str,
     build,
-    shuffle_partitions: int | None,
 ) -> str:
     """Per-run replay scaffold for the operators whose pinned
     semantics DEPEND on the no-data cleanup micro-batch running
@@ -217,11 +210,7 @@ def _multi_run(
 
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     try:
-        n_parts = (
-            shuffle_partitions
-            if shuffle_partitions is not None
-            else _state_partitions([staged], int(prev))
-        )
+        n_parts = _state_partitions([staged], int(prev))
         spark.conf.set("spark.sql.shuffle.partitions", str(n_parts))
         for i in range(len(batches)):
             name = f"batch_{i:05d}.parquet"
@@ -242,7 +231,6 @@ def windowed_stats_replay(
     value_col: str = "value",
     window_sec: int = 300,
     watermark_sec: int = 120,
-    shuffle_partitions: int | None = None,
 ) -> DataFrame:
     """Replay ``batches`` (in order) through the streaming windowed
     aggregation and return the parquet sink's contents — the finalized
@@ -252,10 +240,6 @@ def windowed_stats_replay(
     ``value_sum`` aggregates through DECIMAL(30,12) inside the stream
     (shuffle-order-independent, registry convention); ``value_avg`` is
     derived as sum/n at read-back so both engines share one formula.
-
-    ``shuffle_partitions`` bounds the stream's state partition count
-    (see ``stream_join_replay`` — per-partition state-store setup is
-    the replay's fixed cost; results are partitioning-invariant).
     """
     out = _single_run(
         spark,
@@ -274,7 +258,6 @@ def windowed_stats_replay(
                 F.max(value_col).alias("vmax"),
             )
         ),
-        shuffle_partitions,
     )
     sink = spark.read.parquet(out)
     return sink.select(
@@ -298,7 +281,6 @@ def stream_join_replay(
     ts_col: str = "ts",
     max_gap_sec: int = 600,
     watermark_sec: int = 120,
-    shuffle_partitions: int | None = None,
     join_type: str = "inner",
 ) -> DataFrame:
     """Deterministic replay of a STREAM-STREAM inner join — the
@@ -360,17 +342,13 @@ def stream_join_replay(
     Returns the sink contents: one row per emitted match with both
     sides' payloads.
 
-    ``shuffle_partitions`` bounds the stream's STATE partition count
-    (pinned into the checkpoint at the first batch): a stream-stream
-    join spins four state stores per partition per run, a fixed cost
-    that dwarfs the data at replay scale — the earlier constant 8
+    The STATE partition count (pinned into the checkpoint at the
+    first batch) comes from the bytes staged for the batch pairs
+    (``_state_partitions`` — 64 MB/partition, floor 2): a
+    stream-stream join spins four state stores per partition per run,
+    a fixed cost that dwarfs the data at replay scale — a constant 8
     halved the replay wall vs the session's 32 with identical results.
-    The default (``None``) now derives the count from the bytes staged
-    for the first batch pair (``_state_partitions`` — 64 MB/partition,
-    floor 2), so the harness stays scale-adaptive instead of pinning a
-    local-mode constant; results are partitioning-invariant either
-    way.  Cluster jobs size state explicitly by key cardinality via an
-    int.
+    Results are partitioning-invariant.
     """
     src_l = os.path.join(work_dir, "src_l")
     src_r = os.path.join(work_dir, "src_r")
@@ -447,11 +425,7 @@ def stream_join_replay(
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     prev_multi = spark.conf.get(_ALLOW_MULTIPLE_CONF, "true")
     try:
-        n_parts = (
-            shuffle_partitions
-            if shuffle_partitions is not None
-            else _state_partitions([src_l, src_r], int(prev))
-        )
+        n_parts = _state_partitions([src_l, src_r], int(prev))
         spark.conf.set("spark.sql.shuffle.partitions", str(n_parts))
         # single-watermark mode — see _single_run
         spark.conf.set(_ALLOW_MULTIPLE_CONF, "false")
@@ -471,7 +445,6 @@ def stream_dedup_replay(
     ts_col: str = "ts",
     key_cols: list[str] | None = None,
     delay_sec: int = 120,
-    shuffle_partitions: int | None = None,
 ) -> DataFrame:
     """Replay ``batches`` through the REAL streaming watermarked dedup
     (``withWatermark`` → ``dropDuplicatesWithinWatermark``), one
@@ -510,7 +483,6 @@ def stream_dedup_replay(
         lambda stream: stream.withWatermark(
             ts_col, f"{delay_sec} seconds"
         ).dropDuplicatesWithinWatermark(key_cols),
-        shuffle_partitions,
     )
     return spark.read.parquet(out).select(*key_cols)
 
@@ -525,7 +497,6 @@ def stream_session_replay(
     value_col: str = "value",
     gap_sec: int = 1800,
     watermark_sec: int = 120,
-    shuffle_partitions: int | None = None,
 ) -> DataFrame:
     """Replay ``batches`` through the REAL streaming session-window
     aggregation (``session_window`` + ``withWatermark``, append mode),
@@ -568,7 +539,6 @@ def stream_session_replay(
                 F.sum(F.col(value_col).cast("decimal(30,12)")).alias("vsum"),
             )
         ),
-        shuffle_partitions,
     )
     sink = spark.read.parquet(out)
     return sink.select(
@@ -589,7 +559,6 @@ def stream_stateful_runs_replay(
     seq_col: str = "seq",
     max_gap: int = 2,
     min_span: int = 5,
-    shuffle_partitions: int | None = None,
 ) -> DataFrame:
     """Replay ``batches`` through the CUSTOM stateful operator
     (``streaming/stateful.sustained_runs_stateful`` —
@@ -626,7 +595,6 @@ def stream_stateful_runs_replay(
         lambda stream: sustained_runs_stateful(
             stream, key_col, seq_col, max_gap=max_gap, min_span=min_span
         ),
-        shuffle_partitions,
     )
     return spark.read.parquet(out)
 
@@ -643,7 +611,6 @@ def stream_static_enrich_replay(
     value_col: str = "value",
     window_sec: int = 300,
     watermark_sec: int = 120,
-    shuffle_partitions: int | None = None,
 ) -> DataFrame:
     """Replay ``batches`` through a STREAM-STATIC enrichment pipeline:
     file stream → watermark → INNER join against the static ``dim``
@@ -680,7 +647,6 @@ def stream_static_enrich_replay(
                 F.sum(F.col(value_col).cast("decimal(30,12)")).alias("vsum"),
             )
         ),
-        shuffle_partitions,
     )
     sink = spark.read.parquet(out)
     return sink.select(

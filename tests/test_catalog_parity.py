@@ -1,5 +1,6 @@
 """The correctness gate, run locally: every catalog query must match its
-DuckDB oracle at sf0.001 (fast) — mirrors the driver's sf0.01 check."""
+DuckDB oracle at sf0.001 (fast) — mirrors the driver's sf0.01 check —
+return rows, and plan no global window."""
 
 from __future__ import annotations
 
@@ -10,6 +11,7 @@ from garmin_performance_analysis_spark.harness.compare import (
     compare_frames,
     duckdb_connection,
 )
+from garmin_performance_analysis_spark.plans import checks
 
 from conftest import SF_SMOKE
 
@@ -29,7 +31,17 @@ EMPTY_OK = {"g5_kcore"}
 @pytest.mark.parametrize("name", sorted(CATALOG))
 def test_query_matches_oracle(name, spark, oracle_con):
     spec = CATALOG[name]
-    spark_pdf = spec.fn(spark, SF_SMOKE).toPandas()
+    df = spec.fn(spark, SF_SMOKE)
+    # zero-tolerance gate for the 'move every row to one partition'
+    # window anti-pattern (the round-4 x7/v7 defect): every window must
+    # carry a partition clause — bounded rank-the-top-k frames use the
+    # NON-FOLDABLE constant key from ``operators.windows.
+    # bounded_partition_key`` (a plain ``lit(0)`` is optimized away and
+    # re-trips this gate), so Spark's "No Partition Defined for Window
+    # operation" warning stays out of the bench tail
+    bad = checks.global_window_specs(df)
+    assert not bad, f"{name} has a global window: {bad[0][:120]}"
+    spark_pdf = df.toPandas()
     # a degenerate (0-row) result would make the oracle check vacuous
     if name not in EMPTY_OK:
         assert len(spark_pdf) > 0, f"{name} returned 0 rows at sf0.001"

@@ -1006,11 +1006,18 @@ def test_graph_driver_and_distributed_paths_agree(spark, monkeypatch):
     edges = spark.createDataFrame(all_edges, "src long, dst long")
     sources = spark.createDataFrame([(0,), (106,)], "node long")
 
+    persisted = spark.sparkContext._jsc.getPersistentRDDs
+
     def both(fn):
+        # the driver path pins nothing; the distributed path keeps only
+        # the returned frame's last round checkpoint
+        before = set(persisted().keys())
         monkeypatch.setattr(g, "_DRIVER_GRAPH_MAX_EDGES", 10**9)
         via_driver = sorted(map(tuple, fn().collect()))
+        assert set(persisted().keys()) - before == set()
         monkeypatch.setattr(g, "_DRIVER_GRAPH_MAX_EDGES", 0)
         via_spark = sorted(map(tuple, fn().collect()))
+        assert len(set(persisted().keys()) - before) <= 1
         return via_driver, via_spark
 
     d, s = both(lambda: g.bfs_hops(edges, sources, max_hops=3))

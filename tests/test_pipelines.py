@@ -545,6 +545,20 @@ def test_connected_components_driver_and_distributed_paths_agree(spark, monkeypa
     assert via_driver == via_spark
 
 
+def test_connected_components_releases_blocks_when_not_converging(
+    spark, monkeypatch
+):
+    """The distributed loop's non-convergence error must not leave its
+    persisted edge set or its last checkpointed labels behind."""
+    df = spark.createDataFrame([(1, 2), (2, 3)], "doc_a long, doc_b long")
+    monkeypatch.setattr(dedup, "_DRIVER_CC_MAX_EDGES", 0)
+    persisted = spark.sparkContext._jsc.getPersistentRDDs
+    before = set(persisted().keys())
+    with pytest.raises(RuntimeError, match="did not converge"):
+        dedup.connected_components(df, max_iter=1)
+    assert set(persisted().keys()) - before == set()
+
+
 def test_batch_topk_matches_per_query_brute_force(spark):
     """batch_topk's per-query result must equal running the single-
     query exact baseline for each query id (same comparator: cosine

@@ -220,23 +220,24 @@ def test_j15_bucketed_join_has_no_join_exchange(spark):
     assert plan.count("Exchange (") == 1  # the groupBy only
 
 
-def test_no_global_windows_anywhere_in_catalog(spark):
-    """Zero-tolerance gate for the 'move every row to one partition'
-    window anti-pattern (the round-4 x7/v7 defect).  Every window in
-    every catalog query's final plan must carry a partition clause —
-    bounded rank-the-top-k frames use the NON-FOLDABLE constant key
-    from ``operators.windows.bounded_partition_key`` (``pmod(hash(col),
-    1)``; a plain ``lit(0)`` or ``hash(col)*0`` is optimized away and
-    re-trips this gate) so intent is visible in the plan and Spark's
-    "No Partition Defined for Window operation" warning stays out of
-    the bench tail."""
-    offenders = {}
-    for name, spec in CATALOG.items():
-        df = spec.fn(spark, SF_SMOKE)
-        bad = checks.global_window_specs(df)
-        if bad:
-            offenders[name] = bad[0][:120]
-    assert not offenders, f"global windows in: {offenders}"
+def test_global_window_gate_flags_only_unpartitioned_windows(spark):
+    """The per-entry gate in test_catalog_parity must be able to fail:
+    an ORDER-BY-only window is flagged, the same window partitioned by
+    ``bounded_partition_key`` is not."""
+    from pyspark.sql import Window
+
+    from garmin_performance_analysis_spark.operators.windows import (
+        bounded_partition_key,
+    )
+
+    df = spark.range(10)
+    rank = F.row_number()
+    bad = df.select(rank.over(Window.orderBy("id")).alias("r"))
+    ok = df.select(
+        rank.over(Window.partitionBy(bounded_partition_key("id")).orderBy("id"))
+    )
+    assert len(checks.global_window_specs(bad)) == 1
+    assert checks.global_window_specs(ok) == []
 
 
 def test_s10_scan_is_partition_pruned(spark):

@@ -12,14 +12,15 @@ from __future__ import annotations
 
 import math
 
+import pytest
 from hypothesis import given, settings, strategies as st
 from pyspark.sql import functions as F
 
 from garmin_performance_analysis_spark.operators.stats import (
-    grid_median,
+    five_stat_block,
     grouped_median,
     histogram_median,
-    selected_median,
+    profile_columns,
 )
 from garmin_performance_analysis_spark.operators.windows import sustained_islands
 
@@ -119,31 +120,32 @@ def test_histogram_median_matches_percentile(spark, vals):
     )
 )
 def test_median_shapes_agree(spark, rows):
-    """The bucketed rank scan and the approx-bracket selection are pure
-    plan-shape changes: both must return bit-identical medians to the
-    per-group window scan, whatever the group sizes and however the
-    approximate split points / brackets land (small_n=3 forces the
-    sketch-bracket path even on tiny hypothesis groups)."""
+    """The grid selection is a pure plan-shape change: five_stat_block's
+    grid path must return bit-identical medians to the per-group window
+    scan, whatever the group sizes and however the rank-straddling
+    cells land (the grid width is unrelated to the value scale)."""
     df = spark.createDataFrame(rows, "k int, x double")
     plain = {
         (r["k"], r["x_median"])
         for r in grouped_median(df, ["k"], ["x"]).collect()
     }
-    bucketed = {
-        (r["k"], r["x_median"])
-        for r in grouped_median(df, ["k"], ["x"], bucketed=True).collect()
-    }
-    selected = {
-        (r["k"], r["x_median"])
-        for r in selected_median(df, ["k"], ["x"], small_n=3).collect()
-    }
     gridded = {
         (r["k"], r["x_median"])
-        for r in grid_median(df, ["k"], {"x": 917.3}).collect()
+        for r in five_stat_block(
+            df, ["k"], ["x"], fixed_scale=2, median_grids={"x": 917.3}
+        ).collect()
     }
-    assert plain == bucketed
-    assert plain == selected
     assert plain == gridded
+
+
+def test_grids_require_fixed_scale(spark):
+    """The grid paths accumulate moments as scaled longs, so grids
+    without a fixed scale are rejected rather than silently ignored."""
+    df = spark.createDataFrame([(1, 2.5)], "k int, x double")
+    with pytest.raises(ValueError, match="fixed_scale"):
+        five_stat_block(df, ["k"], ["x"], median_grids={"x": 1.0})
+    with pytest.raises(ValueError, match="fixed_scale"):
+        profile_columns(df, ["x"], grids={"x": 1.0})
 
 
 def brute_nearest(left_dates: list[int], right_dates: list[int], max_gap):

@@ -102,6 +102,23 @@ def test_delete_insert_key_moved_to_other_month(spark, tmp_path):
     assert not os.path.exists(os.path.join(path, f"{MONTH_COL}=2024-02"))
 
 
+def test_delete_insert_releases_its_checkpoint(spark, tmp_path):
+    """The materialized rewrite output is freed once written: repeated
+    ingests into a long-lived session must not accumulate pinned
+    blocks."""
+    path = str(tmp_path / "activities")
+    write_partitioned(_base(spark).limit(2), path, "activity_date")
+    batch = spark.createDataFrame(
+        [(2, d("2024-01-20"), 99.0)],
+        "activity_id long, activity_date date, total_distance_km double",
+    )
+    persisted = spark.sparkContext._jsc.getPersistentRDDs
+    before = set(persisted().keys())
+    for _ in range(3):
+        delete_insert_by_key(spark, path, batch, "activity_id", "activity_date")
+    assert set(persisted().keys()) - before == set()
+
+
 def test_write_partitioned_full_rebuild_drops_absent_months(spark, tmp_path):
     """Full rebuild is a static overwrite: months absent from the new
     frame disappear from disk (ADVICE r1)."""
